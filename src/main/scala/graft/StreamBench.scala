@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.AlertRule
@@ -28,11 +27,6 @@ import graft.streaming.{StreamingAlerts, StreamingCorpus}
   * landings are the reference's operational heartbeat — an AvailableNow
   * cycle is that contract with continuous semantics.) */
 object StreamBench {
-  private def steal(): Long = {
-    val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
-    line.split("\\s+")(8).toLong
-  }
-
   /** The file-stream source wants a DIRECTORY of arriving files; the
     * testdata tables are single parquet files. Stage a temp dir holding
     * a symlink to the file — the arrival directory of a real landing
@@ -45,16 +39,13 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val hz = 100L // USER_HZ on linux
+    val spark = Harness.session(Harness.cpus)
+    // steal seconds between two Harness.steal samples (USER_HZ is 100
+    // on linux); -1 if /proc/stat was unreadable
+    def stealS(start: Long): Double = {
+      val j = Harness.stealBetween(start, Harness.steal())
+      if (j >= 0) j / 100.0 else -1.0
+    }
 
     // ---- cycle 1: vector landing (gate + cell + PQ codes + append) ----
     val embedDir =
@@ -75,11 +66,11 @@ object StreamBench {
     val vecs = spark.readStream.schema(eb.schema)
       .parquet(stageDir(s"$embedDir/embeddings.parquet"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val s0 = steal(); val t0 = System.nanoTime()
+    val s0 = Harness.steal(); val t0 = System.nanoTime()
     StreamingCorpus.landVectorsPq(vecs, seeds, cellStore, cbs,
       s"$base/vstore", s"$base/vck", tau = 0.35).awaitTermination()
     val vecS = (System.nanoTime() - t0) / 1e9
-    val vecSteal = (steal() - s0).toDouble / hz
+    val vecSteal = stealS(s0)
     val landed = spark.read.parquet(s"$base/vstore").count()
 
     // ---- cycle 2: streaming alert micro-batch (rule + dedup + land) ----
@@ -101,7 +92,7 @@ object StreamBench {
       eventData = col("props"))
     val events = spark.readStream.schema(evb.schema)
       .parquet(stageDir(s"$eventsDir/events.parquet"))
-    val s1 = steal(); val t1 = System.nanoTime()
+    val s1 = Harness.steal(); val t1 = System.nanoTime()
     StreamingAlerts.dedupStream(
         StreamingAlerts.ruleStream(events, rule, col("event_id")))
       .writeStream
@@ -112,7 +103,7 @@ object StreamBench {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start().awaitTermination()
     val alertS = (System.nanoTime() - t1) / 1e9
-    val alertSteal = (steal() - s1).toDouble / hz
+    val alertSteal = stealS(s1)
     val alertsOut = spark.read.parquet(s"$base/astore").count()
 
     def f(x: Double) = f"$x%.2f"

@@ -2,53 +2,60 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failures.json naming every query that threw. */
 object Verify {
+
+  /** Dumps each query `only` admits (all when None) to `outDir/<name>`,
+    * writes oracle_sql.json and failures.json beside them, and returns
+    * the failed queries with their errors. A failed query's output
+    * directory is removed, so a stale dump from an earlier run cannot
+    * pass the compare. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]] = None): Seq[(String, String)] = {
+    def keep(name: String): Boolean = only.forall(_.contains(name))
+    new java.io.File(outDir).mkdirs()
+    val failures = SparkEntry.queries.toSeq.filter { case (n, _) => keep(n) }
+      .flatMap { case (name, fn) =>
+        val failed =
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            None
+          } catch { case e: Throwable =>
+            org.apache.commons.io.FileUtils.deleteQuietly(
+              new java.io.File(s"$outDir/$name"))
+            Some(name -> String.valueOf(e.getMessage))
+          }
+        // bound storage occupancy to one query's working set (see
+        // Harness.reclaim): orphaned localCheckpoint blocks otherwise
+        // accumulate across the 180-query dump
+        Harness.reclaim(spark)
+        failed
+      }
+    def obj(kv: Iterable[(String, String)]): String = kv
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter { case (k, _) => keep(k) }))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), obj(failures))
+    failures
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // bound storage occupancy to one query's working set (see
-        // Bench.reclaim): orphaned localCheckpoint blocks otherwise
-        // accumulate across the 140-query dump
-        spark.sparkContext.getPersistentRDDs.values
-          .filter(graft.RddCheckpointAccess.isLocallyCheckpointed)
-          .foreach(_.unpersist(blocking = false))
-      }
+    val spark = Harness.session(Harness.cpus)
+    val failures = try run(spark, sfDir, outDir, only) finally spark.stop()
+    failures.foreach { case (name, msg) =>
+      System.err.println(s"[verify] $name failed: $msg")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} queries failed; " +
+        s"see $outDir/failures.json")
+      sys.exit(1)
+    }
   }
 }

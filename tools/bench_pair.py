@@ -77,7 +77,8 @@ def main():
     # committed BENCH.json while BASELINE.md/duck_out keep the old pair
     # (the structural cause of the round-20 artifact tear).
     bench_tmp = bench_out + ".pairtmp"
-    genv = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": "32",
+    cpus = os.cpu_count()
+    genv = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": str(cpus),
             "SPARK_GRAFT_BENCH_OUT": bench_tmp}
     if only:
         genv["SPARK_GRAFT_BENCH_ONLY"] = only
@@ -155,6 +156,15 @@ def main():
                "label": label, "at": stamp}
     print(json.dumps(summary))
 
+    # promote both JSON artifacts back to back, BEFORE the BASELINE.md
+    # block is rewritten: the block must never cite a pair whose JSONs
+    # were not written (the crash window is the instant between the two
+    # renames, and a crash after them leaves the old block, which the
+    # next run rewrites).
+    os.replace(os.path.join(REPO, bench_tmp), os.path.join(REPO, bench_out))
+    os.replace(os.path.join(REPO, duck_tmp), os.path.join(REPO, duck_out))
+    print(f"[bench_pair] promoted {bench_out} + {duck_out}", file=sys.stderr)
+
     # 4. BASELINE.md headline block between markers — the same run the
     # two committed JSONs hold, so the three cannot disagree.
     block = (
@@ -164,7 +174,7 @@ def main():
         f"written together by `tools/bench_pair.py`; steal "
         f"{steal['duckdb_s']} s) |\n"
         f"| graft Spark total, same boot ({nq} queries{', ' + label if label else ''}) "
-        f"| **{g:.1f} s** = **{ratio}×** (local[32], steady-state: "
+        f"| **{g:.1f} s** = **{ratio}×** (local[{cpus}], steady-state: "
         f"best-of-2 + burst arbitration per query, noop-sink writes; "
         f"steal {steal['graft_s']} s; {stamp}) |\n")
     # subset pairs get per-query rows (that's what they exist to show);
@@ -192,13 +202,6 @@ def main():
     else:
         print(f"[bench_pair] markers not found in {md} (or --dry) — "
               f"block:\n{block}", file=sys.stderr)
-
-    # promote both JSON artifacts back to back, last: bench_out,
-    # duck_out and the MD block now always describe ONE pair, with the
-    # crash window reduced to the instant between the two renames.
-    os.replace(os.path.join(REPO, bench_tmp), os.path.join(REPO, bench_out))
-    os.replace(os.path.join(REPO, duck_tmp), os.path.join(REPO, duck_out))
-    print(f"[bench_pair] promoted {bench_out} + {duck_out}", file=sys.stderr)
 
 
 if __name__ == "__main__":

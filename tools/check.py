@@ -37,6 +37,12 @@ def table_sig(rows, cols):
     return len(rows), tuple(sorted(cols)), hash(tuple(body))
 
 ok = fail = skipped = 0
+# an oracled query with no output (it threw in Verify, or its dump was
+# lost) is a failure, not a silent skip
+for name in sorted(oracles):
+    if not os.path.isdir(os.path.join(out_dir, name)):
+        print(f"[FAIL-miss] {name}: no output directory")
+        fail += 1
 for qdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
     name = os.path.basename(qdir)
     if not os.path.isdir(qdir):
