@@ -30,28 +30,17 @@ object Bench {
     val perQuerySteal =
       scala.collection.mutable.LinkedHashMap.empty[String, Long]
     def runOnce(name: String): Double = {
-      // Trace output (plan rendering can be KBs of string work) is
-      // emitted strictly AFTER the elapsed-time capture so trace mode
-      // never inflates the recorded numbers.
-      var traced: Option[org.apache.spark.sql.DataFrame] = None
       val t0 = System.nanoTime()
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.write.mode("overwrite").format("noop").save()
-        traced = Some(df)
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
       } catch {
         case e: Throwable =>
           // full diagnostic belongs in the BENCH.json FILE (bounded only
           // against pathological megabyte messages); stdout gets a count.
           errors(name) = String.valueOf(e.getMessage).take(4000)
       }
-      val el = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE")) {
-        System.err.println(f"[trace] $name $el%.3f")
-        traced.foreach(df => System.err.println(s"[plan] $name\n" +
-          df.queryExecution.executedPlan.toString.take(8000)))
-      }
-      el
+      (System.nanoTime() - t0) / 1e9
     }
     // Best-of with convergence: the first run of a query pays one-time
     // whole-stage-codegen compilation (hundreds of ms to seconds of
@@ -81,30 +70,6 @@ object Bench {
       }
       best
     }
-
-    if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val i = s.stageInfo
-            // absent for a stage that never ran a task (e.g. skipped)
-            val m = Option(i.taskMetrics)
-            def v(f: org.apache.spark.executor.TaskMetrics => Long): Long =
-              m.fold(-1L)(f)
-            // spill + shuffle volumes ride the trace line so a scale run
-            // can check §5 spill hygiene without the UI (trace mode only;
-            // the timed path and the JSON contract are untouched)
-            System.err.println(s"[stage] ${i.stageId} " +
-              s"${i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)} ms " +
-              s"tasks=${i.numTasks} " +
-              s"spillM=${v(_.memoryBytesSpilled)} spillD=${v(_.diskBytesSpilled)} " +
-              s"shW=${v(_.shuffleWriteMetrics.bytesWritten)} " +
-              s"shR=${v(_.shuffleReadMetrics.totalBytesRead)} " +
-              s"${i.name.split("\n")(0).take(60)}")
-          }
-        })
 
     try runOnce("q_agg_pushdown") // session warm-up, untimed
     finally errors.remove("q_agg_pushdown")

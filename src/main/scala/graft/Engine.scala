@@ -214,7 +214,8 @@ object Engine {
       val noisy = a.groupBy(col("actor"))
         .agg(count(lit(1)).as("n")).filter(col("n") >= 8)
         .select(col("actor"))
-      RuleEngine.suppressOnKey(a, noisy, "actor", "noisy_actor_squelch")
+      RuleEngine.suppressOnKey(RuleEngine.unsuppressed(a), noisy, "actor",
+          "noisy_actor_squelch")
         .select(col("alert_id"), col("actor"), col("suppressed"),
           col("suppression_rule"))
         .orderBy(col("alert_id"))

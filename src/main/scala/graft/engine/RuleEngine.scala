@@ -89,18 +89,26 @@ object RuleEngine {
     * ANY_VALUE which also takes the whole body from one row.
     * Ref: alert_queries_runner.py MERGE_ALERTS (lines 66-97).
     * Scale: single shuffle on the group key with partial aggregation. */
-  def mergeAlerts(alerts: DataFrame): DataFrame = {
-    val byMinId = Seq("query_name", "query_id", "environment", "sources",
-      "actor", "action", "title", "detector", "event_data", "severity")
+  def mergeAlerts(alerts: DataFrame): DataFrame =
     alerts
       .groupBy(col("object"), col("description"))
       .agg(
         min(col("alert_id")).as("alert_id"),
-        byMinId.map(c => min_by(col(c), col("alert_id")).as(c)) ++ Seq(
+        ByMinId.map(c => min_by(col(c), col("alert_id")).as(c)) ++ Seq(
           sum(col("counter")).as("counter"),
           min(col("alert_time_s")).as("alert_time_s"),
           min(col("event_time_s")).as("event_time_s")): _*)
-  }
+
+  /** The merged alert body: every column mergeAlerts takes from the
+    * group's minimum-alert_id row. */
+  private val ByMinId = Seq("query_name", "query_id", "environment",
+    "sources", "actor", "action", "title", "detector", "event_data",
+    "severity")
+
+  /** The store row a MERGE keeps (or inserts from the batch) beside its
+    * key and counter. */
+  private val StoreCarry =
+    ("alert_id" +: ByMinId) ++ Seq("alert_time_s", "event_time_s")
 
   /** Incremental MERGE of a new batch into the persistent alert store
     * (ref: alert_queries_runner.py MERGE_ALERTS WHEN MATCHED → counter
@@ -144,9 +152,6 @@ object RuleEngine {
         "run it as a shuffled full-outer merge on (object, description) " +
         "instead of the broadcast hot loop, or raise maxBatchRows if " +
         "the driver can hold the broadcast")
-    val carry = Seq("alert_id", "query_name", "query_id", "environment",
-      "sources", "actor", "action", "title", "detector", "event_data",
-      "severity", "alert_time_s", "event_time_s")
     val nB = broadcast(n)
     val matchKey =
       col("s.object") <=> col("n.object") &&
@@ -157,7 +162,7 @@ object RuleEngine {
       .select(
         Seq(col("s.object").as("object"),
           col("s.description").as("description")) ++
-          carry.map(c => coalesce(col(s"s.$c"), col(s"n.$c")).as(c)) :+
+          StoreCarry.map(c => coalesce(col(s"s.$c"), col(s"n.$c")).as(c)) :+
           (coalesce(col("s.counter"), lit(0L)) +
             coalesce(col("n.counter"), lit(0L))).as("counter"): _*)
     // pass 2 (key-only store scan, column-pruned): which batch keys hit
@@ -206,9 +211,6 @@ object RuleEngine {
         "duplicate row; fix the rule's target/description mapping"))
     val n = mergeAlerts(newAlerts).withColumn("alert_id",
       coalesce(guard.cast("string"), col("alert_id")))
-    val carry = Seq("alert_id", "query_name", "query_id", "environment",
-      "sources", "actor", "action", "title", "detector", "event_data",
-      "severity", "alert_time_s", "event_time_s")
     val matchKey =
       col("s.object") === col("n.object") &&
         col("s.description") === col("n.description")
@@ -217,29 +219,40 @@ object RuleEngine {
         Seq(coalesce(col("s.object"), col("n.object")).as("object"),
           coalesce(col("s.description"), col("n.description"))
             .as("description")) ++
-          carry.map(c => coalesce(col(s"s.$c"), col(s"n.$c")).as(c)) :+
+          StoreCarry.map(c => coalesce(col(s"s.$c"), col(s"n.$c")).as(c)) :+
           (coalesce(col("s.counter"), lit(0L)) +
             coalesce(col("n.counter"), lit(0L))).as("counter"): _*)
   }
 
   /** Suppression: mark alerts matched by a suppression-rule output
     * (a set of alert ids). Suppression sets are tiny relative to the
-    * alert stream → broadcast join, no shuffle of the big side.
-    * Ref: alert_suppressions_runner.py:15-38. */
+    * alert stream → broadcast join, no shuffle of the big side. On a
+    * stream the join is stream×static and the static set is re-read per
+    * micro-batch, so rule updates take effect without restarting the
+    * query. Ref: alert_suppressions_runner.py:15-38. */
   def suppress(
       alerts: DataFrame,
       suppressedIds: DataFrame,
       ruleName: String): DataFrame =
-    suppressOnKey(alerts, suppressedIds, "alert_id", ruleName)
+    suppressOnKey(unsuppressed(alerts), suppressedIds, "alert_id", ruleName)
 
-  /** Suppression keyed on an arbitrary column. When a suppression rule
-    * is really a predicate over an alert ATTRIBUTE (actor, source ip,
-    * rule name, ...), suppressing on that key broadcasts the attribute
-    * set — bounded by the attribute's cardinality — instead of blowing
-    * the id set up to one row per suppressed ALERT and broadcasting
-    * O(alerts) ids. Same reference semantics (an alert is suppressed iff
-    * a suppression query selected it; alert_suppressions_runner.py:15-38)
-    * — the selection is just factored through its key. */
+  /** Seeds the suppression flags: nothing suppressed, no rule named. */
+  def unsuppressed(alerts: DataFrame): DataFrame =
+    alerts.withColumn("suppressed", lit(false))
+      .withColumn("suppression_rule", lit(null).cast("string"))
+
+  /** One suppression step over flagged alerts (see [[unsuppressed]]),
+    * keyed on an arbitrary column: alerts whose key the rule selected
+    * are suppressed, and the FIRST rule to match an alert names it —
+    * steps compose as the reference's ordered suppression UPDATEs.
+    * When a suppression rule is really a predicate over an alert
+    * ATTRIBUTE (actor, source ip, rule name, ...), suppressing on that
+    * key broadcasts the attribute set — bounded by the attribute's
+    * cardinality — instead of blowing the id set up to one row per
+    * suppressed ALERT and broadcasting O(alerts) ids. Same reference
+    * semantics (an alert is suppressed iff a suppression query selected
+    * it; alert_suppressions_runner.py:15-38) — the selection is just
+    * factored through its key. */
   def suppressOnKey(
       alerts: DataFrame,
       suppressedKeys: DataFrame,
@@ -249,10 +262,11 @@ object RuleEngine {
       suppressedKeys.select(col(keyCol).as("__sup_key")).distinct())
     alerts
       .join(sup, alerts(keyCol) === sup("__sup_key"), "left")
-      .withColumn("suppressed", col("__sup_key").isNotNull)
-      .withColumn(
-        "suppression_rule",
-        when(col("__sup_key").isNotNull, lit(ruleName)))
+      .withColumn("suppression_rule",
+        when(!col("suppressed") && col("__sup_key").isNotNull,
+          lit(ruleName)).otherwise(col("suppression_rule")))
+      .withColumn("suppressed",
+        col("suppressed") || col("__sup_key").isNotNull)
       .drop("__sup_key")
   }
 

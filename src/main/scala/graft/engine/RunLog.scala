@@ -2,7 +2,8 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
 
 /** One per-stage metadata row, mirroring the reference's run records
   * (src/runners/helpers/db.py record_metadata: QUERY_NAME, START_TIME,
@@ -45,76 +46,52 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       error)
   }
 
-  /** Run an alert/violation rule stage: materializes the stage output
-    * count (the INSERTED row count) and wall time. Errors are recorded
-    * with zero counts, matching record_metadata's ERROR path, and
-    * rethrown. */
-  def timedInsert(queryName: String)(stage: => DataFrame): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    try {
-      val df = stage
-      val n = df.count()
-      record(queryName, t0, System.currentTimeMillis(), inserted = n)
-      df
-    } catch {
-      case e: Exception =>
-        record(queryName, t0, System.currentTimeMillis(),
-          error = Some(String.valueOf(e.getMessage)))
-        throw e
-    }
-  }
+  /** Run an alert/violation rule stage, recording its INSERTED row
+    * count. Errors are recorded with zero counts, matching
+    * record_metadata's ERROR path, and rethrown. */
+  def insert(queryName: String, observed: Boolean = false)(
+      stage: => DataFrame): DataFrame =
+    counted(queryName, observed, Seq(count(lit(1)).as("inserted")))(stage)
 
-  /** Run a suppression stage: one aggregate action yields both counts —
-    * no double scan of the alert set. SUPPRESSED counts only the rows
-    * THIS rule matched (suppression_rule == queryName), mirroring the
-    * reference runner's per-rule updated-row count; earlier rules' hits
-    * are not re-attributed. PASSED is the rows still unsuppressed after
-    * this stage. */
-  def timedSuppress(queryName: String)(stage: => DataFrame): DataFrame = {
-    val t0 = System.currentTimeMillis()
-    try {
-      val df = stage
-      val counts = df.groupBy().agg(
-        org.apache.spark.sql.functions.count_if(
-          org.apache.spark.sql.functions.col("suppression_rule") ===
-            queryName),
-        org.apache.spark.sql.functions.count_if(
-          !org.apache.spark.sql.functions.col("suppressed"))).head()
-      record(queryName, t0, System.currentTimeMillis(),
-        suppressed = counts.getLong(0), passed = counts.getLong(1))
-      df
-    } catch {
-      case e: Exception =>
-        record(queryName, t0, System.currentTimeMillis(),
-          error = Some(String.valueOf(e.getMessage)))
-        throw e
-    }
-  }
+  /** Run a suppression stage. SUPPRESSED counts only the rows THIS rule
+    * matched (suppression_rule == queryName), mirroring the reference
+    * runner's per-rule updated-row count; earlier rules' hits are not
+    * re-attributed. PASSED is the rows still unsuppressed after this
+    * stage. */
+  def suppress(queryName: String, observed: Boolean = false)(
+      stage: => DataFrame): DataFrame =
+    counted(queryName, observed, Seq(
+      count_if(col("suppression_rule") === queryName).as("suppressed"),
+      count_if(!col("suppressed")).as("passed")))(stage)
 
-  // ---- observe()-based stages: metrics ride the plan ----------------
-  // The eager timed* variants above run one counting ACTION per stage,
-  // which re-executes the stage's whole subplan when the composed
-  // pipeline later runs — at 100 TB every rule's event scan would
-  // execute twice. These variants attach a CollectMetrics node
-  // (Dataset.observe) instead: the counts are computed as a side
-  // channel of the ONE terminal action, so each rule's scan runs once.
-  // Call flush() after that action to resolve the rows.
+  // A stage's counts are one list of named aggregates over its output,
+  // taken one of two ways. Eager: one aggregate action now, which
+  // re-executes the stage's whole subplan when the composed pipeline
+  // later runs. Observed: a CollectMetrics node (Dataset.observe)
+  // computes the counts as a side channel of the pipeline's ONE
+  // terminal action, so at 100 TB no rule's event scan runs twice; call
+  // flush() after that action to resolve the rows. Datasets analyze
+  // eagerly, so a broken rule (missing column etc.) throws inside
+  // `stage` in either mode and records its ERROR row here.
   private val pendingObs = mutable.ArrayBuffer
-    .empty[(String, Long, org.apache.spark.sql.Observation, Boolean)]
+    .empty[(String, Long, org.apache.spark.sql.Observation)]
 
-  def observedInsert(queryName: String)(stage: => DataFrame): DataFrame = {
+  private def counted(queryName: String, observed: Boolean,
+      counts: Seq[Column])(stage: => DataFrame): DataFrame = {
     val t0 = System.currentTimeMillis()
     try {
       val df = stage
-      val obs = org.apache.spark.sql.Observation(s"${runId}_$queryName")
-      synchronized { pendingObs += ((queryName, t0, obs, false)) }
-      df.observe(obs,
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("inserted"))
+      if (observed) {
+        val obs = org.apache.spark.sql.Observation(s"${runId}_$queryName")
+        synchronized { pendingObs += ((queryName, t0, obs)) }
+        df.observe(obs, counts.head, counts.tail: _*)
+      } else {
+        val r = df.agg(counts.head, counts.tail: _*).head()
+        recordCounts(queryName, t0,
+          r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+        df
+      }
     } catch {
-      // Datasets analyze eagerly: a broken rule (missing column etc.)
-      // throws HERE — record the error row (the monitoring-rules feed,
-      // like timedInsert's path) and rethrow
       case e: Exception =>
         record(queryName, t0, System.currentTimeMillis(),
           error = Some(String.valueOf(e.getMessage)))
@@ -122,22 +99,12 @@ class RunLog(val runId: String) { // non-final: specs override flush to
     }
   }
 
-  def observedSuppress(queryName: String)(stage: => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count_if}
-    val t0 = System.currentTimeMillis()
-    try {
-      val df = stage
-      val obs = org.apache.spark.sql.Observation(s"${runId}_$queryName")
-      synchronized { pendingObs += ((queryName, t0, obs, true)) }
-      df.observe(obs,
-        count_if(col("suppression_rule") === queryName).as("suppressed"),
-        count_if(!col("suppressed")).as("passed"))
-    } catch {
-      case e: Exception =>
-        record(queryName, t0, System.currentTimeMillis(),
-          error = Some(String.valueOf(e.getMessage)))
-        throw e
-    }
+  private def recordCounts(
+      queryName: String, t0: Long, m: Map[String, Any]): Unit = {
+    def n(k: String) = m.getOrElse(k, 0L).asInstanceOf[Long]
+    record(queryName, t0, System.currentTimeMillis(),
+      inserted = n("inserted"), suppressed = n("suppressed"),
+      passed = n("passed"))
   }
 
   /** Drop pending observations WITHOUT recording rows — for the
@@ -157,7 +124,7 @@ class RunLog(val runId: String) { // non-final: specs override flush to
       pendingObs.clear()
       t
     }
-    toFlush.foreach { case (name, t0, obs, isSuppress) =>
+    toFlush.foreach { case (name, t0, obs) =>
       // Observation.get blocks until the observed action's metrics are
       // delivered (asynchronously, shortly after the action) — bound it
       // so a never-executed stage records an error instead of hanging
@@ -174,16 +141,10 @@ class RunLog(val runId: String) { // non-final: specs override flush to
         } catch {
           case _: java.util.concurrent.TimeoutException => Map.empty
         }
-      val end = System.currentTimeMillis()
-      if (m.isEmpty) {
-        record(name, t0, end, error = Some("metrics never observed"))
-      } else if (isSuppress) {
-        record(name, t0, end,
-          suppressed = m("suppressed").asInstanceOf[Long],
-          passed = m("passed").asInstanceOf[Long])
-      } else {
-        record(name, t0, end, inserted = m("inserted").asInstanceOf[Long])
-      }
+      if (m.isEmpty)
+        record(name, t0, System.currentTimeMillis(),
+          error = Some("metrics never observed"))
+      else recordCounts(name, t0, m)
     }
   }
 

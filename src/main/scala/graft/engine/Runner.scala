@@ -87,63 +87,78 @@ object Runner {
       suppressions: Seq[SuppressionRule],
       sinks: Seq[AlertSink],
       cfg: RunConfig,
-      log: RunLog): AlertRunResult = {
-
-    def ruleFrame(r: AlertRule): DataFrame =
-      RuleEngine.runAlertRule(
-        events, r, idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS)
-
+      log: RunLog): AlertRunResult =
     // 1. each alert rule over the shared time window (ref:
-    //    alert_queries_runner.main loops rule views), ISOLATED
-    //    per-rule: an analysis-broken rule throws inside
-    //    observedInsert (Datasets analyze eagerly), which records its
-    //    ERROR metadata row; the rule drops out and the run continues.
-    //    Stage counts for healthy rules ride the plan via observe() —
-    //    the ONE terminal action below executes every rule's event
-    //    scan exactly once; the eager count-per-stage alternative
-    //    would scan each rule's events twice — a real cost at 100 TB.
-    val constructed: Seq[(AlertRule, DataFrame)] = rules.flatMap { r =>
-      try Some(r -> log.observedInsert(r.name)(ruleFrame(r)))
+    //    alert_queries_runner.main loops rule views), isolated per rule
+    isolated(rules, log)(_.name,
+      r => RuleEngine.runAlertRule(
+        events, r, idCol, cfg.fromTs, cfg.toTsExclusive, cfg.alertTimeS),
+      emptyAlerts(events, idCol, cfg)) { (alerts, observed) =>
+      pipeline(alerts, suppressions, sinks, cfg, log, observed)
+    }
+
+  /** The rule isolation both runners share. Each rule is constructed
+    * through an observed insert stage: an analysis-broken rule throws
+    * there (Datasets analyze eagerly), which records its ERROR
+    * metadata row; the rule drops out and the run continues. Stage
+    * counts for healthy rules ride the plan via observe(), so the ONE
+    * terminal action inside `downstream` executes every rule's scan
+    * exactly once; the eager count-per-stage alternative would scan
+    * each rule's input twice — a real cost at 100 TB. The union of the
+    * constructed rules (or `empty`, when none survived) feeds
+    * `downstream`.
+    *
+    * If that terminal action fails (a FusedPlanFailure: a rule's
+    * projection threw at RUNTIME inside the fused plan) the pending
+    * observations can never resolve — they are discarded — and each
+    * constructed rule is probed with its own action: the broken rule
+    * records its ERROR row (ref: per-rule try/except), everyone else
+    * records real counts, and `downstream` re-runs on the survivors
+    * with eager per-stage metadata. Rules that already failed
+    * construction keep their first ERROR row (one metadata row per rule
+    * per run, like the reference). The probe must evaluate EVERY
+    * column, not just count rows — a bare count() lets column pruning
+    * skip the very projection that threw (the bomb would re-enter the
+    * pipeline and fail it again downstream). Materialize.frame stores
+    * full rows, so a broken projection throws inside its own probe and
+    * healthy rules re-enter the pipeline pre-materialized. A second
+    * terminal failure (e.g. a broken sink set) is final and surfaces
+    * its real cause, not the marker. */
+  private def isolated[R, T](rules: Seq[R], log: RunLog)(
+      name: R => String, frame: R => DataFrame, empty: => DataFrame)(
+      downstream: (DataFrame, Boolean) => T): T = {
+    def attempt(frames: Seq[DataFrame], observed: Boolean)
+        : Either[Throwable, T] =
+      try Right(downstream(
+        if (frames.isEmpty) empty else frames.reduce(_.unionByName(_)),
+        observed))
+      catch { case f: FusedPlanFailure => Left(f.getCause) }
+    val constructed = rules.flatMap { r =>
+      try Some(r -> log.insert(name(r), observed = true)(frame(r)))
       catch { case NonFatal(_) => None } // ERROR row already recorded
     }
-    val alerts =
-      if (constructed.isEmpty) emptyAlerts(events, idCol, cfg)
-      else constructed.map(_._2).reduce(_.unionByName(_))
-
-    try pipeline(alerts, suppressions, sinks, cfg, log, observed = true)
-    catch {
-      case _: FusedPlanFailure =>
-        // a rule's projection threw at RUNTIME inside the fused plan.
-        // The pending observations can never resolve — discard them —
-        // then probe each constructed rule with its own action: the
-        // broken rule records its ERROR row (ref: per-rule try/except),
-        // everyone else records real counts, and the pipeline re-runs
-        // on the survivors with eager per-stage metadata. Rules that
-        // already failed construction keep their pass-1 ERROR row (one
-        // metadata row per rule per run, like the reference).
-        log.discardPending()
-        // the probe must evaluate EVERY column, not just count rows —
-        // a bare count() lets column pruning skip the very projection
-        // that threw (the bomb would re-enter the pipeline and fail it
-        // again downstream). Materialize.frame stores full rows, so a
-        // broken projection throws here, inside this rule's own probe;
-        // healthy rules re-enter the pipeline pre-materialized.
-        val survivors = constructed.flatMap { case (r, _) =>
-          try Some(log.timedInsert(r.name)(
-            graft.Materialize.frame(ruleFrame(r))))
-          catch { case NonFatal(_) => None }
-        }
-        val healthy =
-          if (survivors.isEmpty) emptyAlerts(events, idCol, cfg)
-          else survivors.reduce(_.unionByName(_))
-        try pipeline(healthy, suppressions, sinks, cfg, log,
-          observed = false)
-        catch { // a second terminal failure (e.g. a broken sink set)
-          // is final — surface the real cause, not the marker
-          case f: FusedPlanFailure => throw f.getCause
-        }
+    attempt(constructed.map(_._2), observed = true).getOrElse {
+      log.discardPending()
+      val survivors = constructed.flatMap { case (r, _) =>
+        try Some(log.insert(name(r))(graft.Materialize.frame(frame(r))))
+        catch { case NonFatal(_) => None }
+      }
+      attempt(survivors, observed = false).fold(e => throw e, identity)
     }
   }
+
+  /** The suppression rules over a frame keyed on `key`, first matching
+    * rule wins (ref: alert_suppressions_runner runs each rule's UPDATE
+    * in its own try/except — a broken suppression records an ERROR row
+    * and is skipped, the set passes through unflagged by it). */
+  private def suppressAll(frame: DataFrame, key: String,
+      rules: Seq[SuppressionRule], log: RunLog, observed: Boolean)
+      : DataFrame =
+    rules.foldLeft(RuleEngine.unsuppressed(frame)) { (acc, rule) =>
+      try log.suppress(rule.name, observed)(
+        RuleEngine.suppressOnKey(acc, rule.selectIds(acc), key, rule.name))
+      catch { case NonFatal(_) => acc } // ERROR row recorded; skip
+    }
 
   /** merge → suppress → correlate → dispatch over an assembled alert
     * set, with per-stage metadata either observed (fast path: metrics
@@ -157,38 +172,14 @@ object Runner {
       log: RunLog,
       observed: Boolean): AlertRunResult = {
 
-    def insertStage(name: String)(stage: => DataFrame): DataFrame =
-      if (observed) log.observedInsert(name)(stage)
-      else log.timedInsert(name)(stage)
-    def suppressStage(name: String)(stage: => DataFrame): DataFrame =
-      if (observed) log.observedSuppress(name)(stage)
-      else log.timedSuppress(name)(stage)
-
     // 2. merge/dedup (ref: MERGE_ALERTS)
-    val merged = insertStage("alert_merge")(RuleEngine.mergeAlerts(alerts))
+    val merged =
+      log.insert("alert_merge", observed)(RuleEngine.mergeAlerts(alerts))
 
-    // 3. suppression rules, first matching rule wins (ref:
-    //    alert_suppressions_runner runs each rule's UPDATE in its own
-    //    try/except — a broken suppression records an ERROR row and is
-    //    skipped, the alert set passes through unflagged by it)
-    val suppressed = suppressions.foldLeft(
-      merged.withColumn("suppressed", lit(false))
-        .withColumn("suppression_rule", lit(null).cast("string"))) {
-      case (acc, rule) =>
-        try {
-          suppressStage(rule.name) {
-            val ids = broadcast(rule.selectIds(acc)
-              .select(col("alert_id").as("__sup_id")).distinct())
-            acc.join(ids, acc("alert_id") === ids("__sup_id"), "left")
-              .withColumn("suppression_rule",
-                when(!col("suppressed") && col("__sup_id").isNotNull,
-                  lit(rule.name)).otherwise(col("suppression_rule")))
-              .withColumn("suppressed",
-                col("suppressed") || col("__sup_id").isNotNull)
-              .drop("__sup_id")
-          }
-        } catch { case NonFatal(_) => acc } // ERROR row recorded; skip
-    } // the run's results table: read by correlate + returned
+    // 3. suppression rules — the run's results table: read by
+    //    correlate + returned
+    val suppressed =
+      suppressAll(merged, "alert_id", suppressions, log, observed)
 
     // 4. correlation over the live (non-suppressed) alerts (ref:
     //    alert_processor processes unsuppressed alerts)
@@ -226,7 +217,7 @@ object Runner {
     // success stay persisted for the returned frames' consumers
     try {
       log.flush()
-      val handled = log.timedInsert("alert_dispatch") {
+      val handled = log.insert("alert_dispatch") {
         Dispatcher.recordStatus(live, results)
       }
       AlertRunResult(handled, suppressed, results)
@@ -263,63 +254,15 @@ object Runner {
       log: RunLog): DataFrame = {
     require(ruleInputs.nonEmpty, "runViolations needs at least one rule")
 
-    val constructed = ruleInputs.flatMap { case (rule, grouped) =>
-      try Some((rule, grouped,
-        log.observedInsert(rule.name)(
-          RuleEngine.runViolationRule(grouped, rule))))
-      catch { case NonFatal(_) => None } // ERROR row already recorded
-    }
-
-    def downstream(violations: DataFrame, observed: Boolean): DataFrame = {
-      def suppressStage(name: String)(stage: => DataFrame): DataFrame =
-        if (observed) log.observedSuppress(name)(stage)
-        else log.timedSuppress(name)(stage)
-      val flagged = suppressions.foldLeft(
-        violations.withColumn("suppressed", lit(false))
-          .withColumn("suppression_rule", lit(null).cast("string"))) {
-        case (acc, rule) =>
-          try {
-            suppressStage(rule.name) {
-              val ids = broadcast(rule.selectIds(acc)
-                .select(col("id").as("__sup_id")).distinct())
-              acc.join(ids, acc("id") === ids("__sup_id"), "left")
-                .withColumn("suppression_rule",
-                  when(!col("suppressed") && col("__sup_id").isNotNull,
-                    lit(rule.name)).otherwise(col("suppression_rule")))
-                .withColumn("suppressed",
-                  col("suppressed") || col("__sup_id").isNotNull)
-                .drop("__sup_id")
-            }
-          } catch { case NonFatal(_) => acc }
-      }
-      // the terminal action resolving every observed stage metric; on
-      // the fused path its failure is marked so ONLY it (a rule's
-      // projection throwing mid-task) can trigger degradation
-      if (observed)
-        try flagged.transform(graft.Materialize.frame)
-        catch { case NonFatal(e) => throw new FusedPlanFailure(e) }
-      else flagged.transform(graft.Materialize.frame)
-    }
-
-    val union =
-      if (constructed.isEmpty) emptyViolations(ruleInputs.head._2)
-      else constructed.map(_._3).reduce(_.unionByName(_))
-    val out = try downstream(union, observed = true) catch {
-      case _: FusedPlanFailure =>
-        // runtime failure inside the fused plan: degrade to per-rule
-        // isolation (ref: violation_queries_runner per-rule try/except)
-        log.discardPending()
-        // full-row probe, not count(): see runAlerts — pruning would
-        // skip the broken projection and re-admit the bomb
-        val survivors = constructed.flatMap { case (rule, grouped, _) =>
-          try Some(log.timedInsert(rule.name)(graft.Materialize.frame(
-            RuleEngine.runViolationRule(grouped, rule))))
-          catch { case NonFatal(_) => None }
-        }
-        val healthy =
-          if (survivors.isEmpty) emptyViolations(ruleInputs.head._2)
-          else survivors.reduce(_.unionByName(_))
-        downstream(healthy, observed = false)
+    val out = isolated(ruleInputs, log)(_._1.name,
+      { case (rule, grouped) => RuleEngine.runViolationRule(grouped, rule) },
+      emptyViolations(ruleInputs.head._2)) { (violations, observed) =>
+      val flagged = suppressAll(violations, "id", suppressions, log, observed)
+      // the terminal action resolving every observed stage metric; its
+      // failure is marked so ONLY it (a rule's projection throwing
+      // mid-task) can trigger degradation
+      try flagged.transform(graft.Materialize.frame)
+      catch { case NonFatal(e) => throw new FusedPlanFailure(e) }
     }
     // flush OUTSIDE the degradation scope (a flush-time failure after a
     // successful terminal action must propagate, not duplicate every

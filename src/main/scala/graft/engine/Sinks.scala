@@ -377,22 +377,29 @@ object Dispatcher {
       Encoders.STRING, Encoders.STRING, Encoders.STRING))
       .mapPartitions { it =>
         it.map { case (alertId, handler, payload) =>
-          byName.get(handler) match {
-            case None =>
-              HandlerResult(alertId, handler, success = false,
-                s"missing handler: $handler")
-            case Some(sink) =>
-              try HandlerResult(alertId, handler, success = true,
-                sink.send(payload))
-              catch {
-                case e: Exception =>
-                  HandlerResult(alertId, handler, success = false,
-                    String.valueOf(e.getMessage))
-              }
-          }
+          deliver(byName, alertId, handler, payload, "{}")
         }
       }
   }
+
+  /** One delivery: look the handler up, send, and turn a missing
+    * handler or a throwing send into a success=false row (the
+    * reference's 'missing type key' / handler-error paths). */
+  private def deliver(byName: Map[String, AlertSink], alertId: String,
+      handler: String, payload: String, config: String): HandlerResult =
+    byName.get(handler) match {
+      case None =>
+        HandlerResult(alertId, handler, success = false,
+          s"missing handler: $handler")
+      case Some(sink) =>
+        try HandlerResult(alertId, handler, success = true,
+          sink.send(payload, config))
+        catch {
+          case e: Exception =>
+            HandlerResult(alertId, handler, success = false,
+              String.valueOf(e.getMessage))
+        }
+    }
 
   /** The dispatcher's poll-batch selection (alert_dispatcher.py
     * GET_ALERTS_QUERY): `IFF(alert:HANDLERS IS NULL, ticket IS NULL,
@@ -471,19 +478,7 @@ object Dispatcher {
               if (tpe == null)
                 HandlerResult(alertId, null, success = false,
                   s"missing type key: $config")
-              else byName.get(tpe) match {
-                case None =>
-                  HandlerResult(alertId, tpe, success = false,
-                    s"missing handler: $tpe")
-                case Some(sink) =>
-                  try HandlerResult(alertId, tpe, success = true,
-                    sink.send(payload, config))
-                  catch {
-                    case ex: Exception =>
-                      HandlerResult(alertId, tpe, success = false,
-                        String.valueOf(ex.getMessage))
-                  }
-              }
+              else deliver(byName, alertId, tpe, payload, config)
             }
           }
         }
@@ -594,17 +589,5 @@ object Dispatcher {
       .agg(collect_list(
         struct(col("handler"), col("success"), col("details"))).as("handled"))
     alerts.join(agg, Seq("alert_id"), "left")
-  }
-
-  /** Warehouse-style batch destination: deliver a whole routed subset
-    * as one distributed parquet append (per-row send would be wrong for
-    * a columnar store). Returns one result row per alert. */
-  def deliverParquet(
-      alerts: DataFrame,
-      path: String): Dataset[HandlerResult] = {
-    alerts.write.mode("append").parquet(path)
-    implicit val enc = Encoders.product[HandlerResult]
-    alerts.select(col("alert_id").cast("string")).as[String](Encoders.STRING)
-      .map(id => HandlerResult(id, "parquet", success = true, path))
   }
 }

@@ -154,19 +154,19 @@ class DispatchSpec extends SparkSuite {
         eventData = col("props"))
 
     val log = RunLog.newRun()
-    val errors = log.timedInsert("errors_rule") {
+    val errors = log.insert("errors_rule") {
       RuleEngine.runAlertRule(events, rule("errors_rule",
         col("event_type") === "error"), col("event_id"),
         "2024-01-01 00:00:00", "2024-01-02 00:00:00", 0L)
     }
-    log.timedInsert("logins_rule") {
+    log.insert("logins_rule") {
       RuleEngine.runAlertRule(events, rule("logins_rule",
         col("event_type") === "login"), col("event_id"),
         "2024-01-01 00:00:00", "2024-01-02 00:00:00", 0L)
     }
     // the log stage name must match the rule name stamped into
-    // suppression_rule — timedSuppress counts only THIS rule's hits
-    log.timedSuppress("errors_suppress") {
+    // suppression_rule — suppress counts only THIS rule's hits
+    log.suppress("errors_suppress") {
       RuleEngine.suppress(errors,
         errors.filter(col("actor") === "u1").select("alert_id"),
         "errors_suppress")
@@ -187,7 +187,7 @@ class DispatchSpec extends SparkSuite {
 
     // error path: failing stage is recorded with the message, rethrown
     intercept[Exception] {
-      log.timedInsert("bad_rule") {
+      log.insert("bad_rule") {
         events.select(col("nope"))
       }
     }

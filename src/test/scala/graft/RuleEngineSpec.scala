@@ -210,8 +210,8 @@ class RuleEngineSpec extends SparkSuite {
   }
 
   test("suppressOnKey on actor equals id-based suppress of that actor's alerts") {
-    val byKey = RuleEngine.suppressOnKey(
-      alerts, alerts.filter(col("actor") === "u1").select("actor"),
+    val byKey = RuleEngine.suppressOnKey(RuleEngine.unsuppressed(alerts),
+      alerts.filter(col("actor") === "u1").select("actor"),
       "actor", "squelch2")
     val byId = RuleEngine.suppress(
       alerts, alerts.filter(col("actor") === "u1").select("alert_id"),

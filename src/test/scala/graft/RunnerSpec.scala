@@ -142,18 +142,86 @@ class RunnerSpec extends SparkSuite {
     assert(log.entries(2).inserted == 3)
   }
 
+  test("suppression rules: the first match names an alert, each rule " +
+      "counts only its own hits, a throwing rule is skipped") {
+    val buf = s"runner-fold-${System.nanoTime()}"
+    val log = RunLog.newRun()
+    val result = Runner.runAlerts(
+      events = mkEvents,
+      rules = Seq(
+        rule("errors", col("event_type") === "error"),
+        rule("logins", col("event_type") === "login")),
+      idCol = col("event_id"),
+      suppressions = Seq(
+        SuppressionRule("squelch_u1",
+          alerts => alerts.filter(col("actor") === "u1").select("alert_id")),
+        SuppressionRule("broken_select",
+          _ => throw new IllegalStateException("selectIds exploded")),
+        SuppressionRule("squelch_errors",
+          alerts => alerts.filter(col("action") === "error")
+            .select("alert_id"))),
+      sinks = Seq(new MemorySink(buf)),
+      cfg = RunConfig("2024-01-01 00:00:00", "2024-01-02 00:00:00",
+        alertTimeS = 0L, defaultHandler = "memory"),
+      log = log)
+
+    // merged store: u1 errors, u3 errors, u2 login. squelch_u1 and
+    // squelch_errors both match u1's alert; the first rule keeps it
+    val byActor = result.store.collect()
+      .map(r => r.getAs[String]("actor") ->
+        Option(r.getAs[String]("suppression_rule"))).toMap
+    assert(byActor == Map("u1" -> Some("squelch_u1"),
+      "u3" -> Some("squelch_errors"), "u2" -> None))
+    assert(MemorySink.drain(buf).length == 1) // only the login is live
+
+    val byName = log.entries.groupBy(_.query_name).map {
+      case (n, rows) => assert(rows.size == 1, n); n -> rows.head
+    }
+    assert(byName("squelch_u1").suppressed == 1)
+    assert(byName("squelch_u1").passed == 2)
+    // u1's alert is not re-attributed to the second matching rule
+    assert(byName("squelch_errors").suppressed == 1)
+    assert(byName("squelch_errors").passed == 1)
+    val broken = byName("broken_select")
+    assert(broken.error.exists(_.contains("selectIds exploded")))
+    assert(broken.suppressed == 0 && broken.passed == 0)
+    assert(log.entries.count(_.error.nonEmpty) == 1)
+  }
+
+  test("observed and eager stage counts agree") {
+    val alerts = RuleEngine.runAlertRule(mkEvents,
+      rule("errors", col("event_type") === "error"), col("event_id"),
+      "2024-01-01 00:00:00", "2024-01-02 00:00:00", 0L)
+    val flagged = RuleEngine.suppress(alerts,
+      alerts.filter(col("actor") === "u1").select("alert_id"), "squelch_u1")
+    def counts(log: RunLog) = log.entries.map(r =>
+      (r.query_name, r.inserted, r.suppressed, r.passed, r.error))
+
+    val observed = RunLog.newRun()
+    observed.insert("errors", observed = true)(alerts).collect()
+    observed.suppress("squelch_u1", observed = true)(flagged).collect()
+    observed.flush()
+    val eager = RunLog.newRun()
+    eager.insert("errors")(alerts)
+    eager.suppress("squelch_u1")(flagged)
+
+    assert(counts(eager) == Seq(("errors", 4L, 0L, 0L, None),
+      ("squelch_u1", 0L, 2L, 2L, None)))
+    assert(counts(observed) == counts(eager))
+  }
+
   test("monitoring rule over run metadata flags failed rule runs") {
     // the reference's snowalert_query_rule_run_errors pattern: the
     // metadata table is itself a rule source (ref: db.record_metadata +
     // packs/snowflake_security_monitoring.sql error rules)
     val log = RunLog.newRun()
-    log.timedInsert("good_rule") {
+    log.insert("good_rule") {
       RuleEngine.runAlertRule(mkEvents,
         rule("good_rule", col("event_type") === "error"), col("event_id"),
         "2024-01-01 00:00:00", "2024-01-02 00:00:00", 0L)
     }
     intercept[Exception] {
-      log.timedInsert("broken_rule") { mkEvents.select(col("missing")) }
+      log.insert("broken_rule") { mkEvents.select(col("missing")) }
     }
 
     val meta = log.toDF(spark)
@@ -371,7 +439,7 @@ class RunnerSpec extends SparkSuite {
     // dispatch ran exactly once: 5 raw alerts merge to 3 live sends
     assert(MemorySink.drain(buf).length == 3,
       "flush failure must not re-run the pipeline (duplicate dispatch)")
-    // and no degraded per-rule timedInsert rows were recorded
+    // and no degraded per-rule insert rows were recorded
     assert(log.entries.isEmpty,
       s"flush failure must not degrade to per-rule probes: ${log.entries}")
     // the pass-1 suppressed/results caches were released, not stranded

@@ -153,7 +153,7 @@ class StreamingSpec extends SparkSuite {
     assert(stackedWms.contains("ts"), stackedWms.toString)
   }
 
-  test("suppressStream flags alerts against a static suppression set") {
+  test("suppress flags streaming alerts against a static suppression set") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[StreamEv]
     val alerts = StreamingAlerts.ruleStream(input.toDF(), rule, col("event_id"))
@@ -161,7 +161,7 @@ class StreamingSpec extends SparkSuite {
       // deterministic id of event 1 under rule sr1
       org.apache.spark.sql.functions.md5(lit("sr1:1")))
     val supDf = spark.range(1).select(supIds.head.as("alert_id"))
-    val q = StreamingAlerts.suppressStream(alerts, supDf, "static_squelch")
+    val q = graft.engine.RuleEngine.suppress(alerts, supDf, "static_squelch")
       .writeStream.format("memory").queryName("sup_out")
       .outputMode(OutputMode.Append).start()
     input.addData(
